@@ -182,8 +182,30 @@ object EnvelopeBuilder {
     * references (cheap lambdas); the per-column decode + JSON concat then runs
     * on flat exploded columns — ordinary expressions inside whole-stage
     * codegen, no interpreted higher-order functions on the hot path. */
-  def envelopesStatic(raw: DataFrame, cols: Seq[Decode.ColMeta]): DataFrame = {
-    val rowsArrT = "array<array<string>>"
+  def envelopesStatic(raw: DataFrame, cols: Seq[Decode.ColMeta]): DataFrame =
+    envelopesStaticCase(raw, Nil, cols)
+
+  /** [[envelopesStatic]] over several column lists in ONE projection: each
+    * row renders with the list of the first `branches` predicate it
+    * satisfies, else with `otherwise` — a `CASE` per envelope, so input that
+    * mixes tables and schema versions is decoded in a single narrow pass
+    * that keeps its partitioning and row order. Predicates may read
+    * `database`, `table` and `stmt_seq`. */
+  def envelopesStaticCase(raw: DataFrame, branches: Seq[(Column, Seq[Decode.ColMeta])],
+                          otherwise: Seq[Decode.ColMeta]): DataFrame = {
+    val isUpdate = col("event_type") === "update"
+    def updateJson(cols: Seq[Decode.ColMeta]): Column =
+      concat(lit("{\"data\":{\"new_data\":"), rowJsonStatic(col("pair.new"), cols),
+             lit(",\"old_data\":"), rowJsonStatic(col("pair.old"), cols), lit("}}"))
+    def rowJson(cols: Seq[Decode.ColMeta]): Column =
+      concat(lit("{\"data\":"), rowJsonStatic(col("pair.old"), cols), lit("}"))
+    // one flat CASE: alter, then (update, other) per branch, then `otherwise`
+    val event = branches.foldLeft(
+        when(col("event_type") === "alter", lit(null).cast("string"))) {
+        case (c, (p, cols)) => c.when(p && isUpdate, updateJson(cols)).when(p, rowJson(cols))
+      }
+      .when(isUpdate, updateJson(otherwise))
+      .otherwise(rowJson(otherwise))
     val nPairs = expr("size(rows) div 2")
     val nullRow = lit(null).cast("array<string>")
     val pairs =
@@ -201,12 +223,7 @@ object EnvelopeBuilder {
       .select(col("database"), col("table"), col("event_type"),
         col("ts").as("time"), col("stmt_seq"),
         posexplode(pairs).as(Seq("pair_pos", "pair")))
-      .withColumn("event",
-        when(col("event_type") === "alter", lit(null).cast("string"))
-          .when(col("event_type") === "update",
-            concat(lit("{\"data\":{\"new_data\":"), rowJsonStatic(col("pair.new"), cols),
-                   lit(",\"old_data\":"), rowJsonStatic(col("pair.old"), cols), lit("}}")))
-          .otherwise(concat(lit("{\"data\":"), rowJsonStatic(col("pair.old"), cols), lit("}"))))
+      .withColumn("event", event)
       .withColumn("topic", concat(col("database"), lit("."), col("table")))
       .drop("pair")
   }

@@ -24,6 +24,11 @@ import org.apache.spark.storage.StorageLevel
   * (range boundaries are sampled and would not replay identically otherwise).
   * In the streaming path the base additionally includes the restored offset's
   * index, giving continuity across restarts (ST2 semantics).
+  *
+  * A binlog micro-batch usually arrives ALREADY in that order: the source
+  * plans its partitions in byte order and `stmt_seq` is the byte position.
+  * [[denseInOrderManaged]] then skips step 1's range shuffle and keeps the
+  * source partitions, checking the order instead of imposing it.
   */
 object EventIndexer {
 
@@ -77,6 +82,48 @@ object EventIndexer {
     * `order` must be a total order (unique key) for a deterministic result. */
   def dense(df: DataFrame, order: Seq[Column], outCol: String, start: Long = 0L): DataFrame =
     denseManaged(df, order, outCol, start)._1
+
+  /** [[dense]] for input whose partitions already follow each other in
+    * `order` order, plus the row count per value of the string column
+    * `countBy`, and the cleanup handle ([[prefixSumManaged]]'s contract).
+    *
+    * Each partition is sorted in place (no exchange) and persisted; ONE
+    * aggregate per (partition, `countBy`) then returns the row count and the
+    * min/max of the LONG leading key `order.head`. When every non-empty
+    * partition's key range lies strictly below the next one's, the index is
+    * the partition's base plus the row's local position, exactly as in
+    * [[denseManaged]] — which is also the fallback when the ranges overlap
+    * (a source that does not deliver in order). Either way the result
+    * equals [[dense]]'s and the counts come from the same aggregate. */
+  def denseInOrderManaged(df: DataFrame, order: Seq[Column], countBy: String,
+                          outCol: String, start: Long = 0L)
+      : (DataFrame, Map[String, Long], () => Unit) = {
+    val local = df.sortWithinPartitions(order: _*)
+      .withColumn("__pid", spark_partition_id())
+      .withColumn("__mid", monotonically_increasing_id())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // one row per (partition, countBy value): (pid, key, rows, lo, hi)
+    val parts = local.groupBy(col("__pid"), col(countBy))
+      .agg(count(lit(1)), min(order.head), max(order.head))
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    val counts = parts.groupMapReduce(_._2)(_._3)(_ + _)
+    // per partition, in partition order: (pid, rows, lo, hi)
+    val ranges = parts.groupBy(_._1).toSeq.sortBy(_._1).map { case (pid, ps) =>
+      (pid, ps.map(_._3).sum, ps.map(_._4).min, ps.map(_._5).max)
+    }
+    val inOrder = ranges.zip(ranges.drop(1)).forall { case (a, b) => a._4 < b._3 }
+    if (inOrder) {
+      val bases = ranges.map(_._1).zip(ranges.map(_._2).scanLeft(0L)(_ + _)).toMap
+      val out = local
+        .withColumn(outCol, element_at(typedLit(bases), col("__pid")) +
+          (col("__mid") - shiftleft(col("__pid").cast("long"), 33)) + lit(start + 1))
+        .drop("__pid", "__mid")
+      (out, counts, () => { local.unpersist(); () })
+    } else {
+      val (out, cleanup) = denseManaged(local.drop("__pid", "__mid"), order, outCol, start)
+      (out, counts, () => { cleanup(); local.unpersist(); () })
+    }
+  }
 
   /** [[dense]] with the same cleanup contract as [[prefixSumManaged]]. */
   def denseManaged(df: DataFrame, order: Seq[Column], outCol: String,

@@ -2,7 +2,7 @@ package graft.cdc
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Schema registry for drift handling (SURVEY §7.4).
@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Registry state is driver-side metadata (tables × versions — control-plane
   * scale, like the reference's `schema.Table` cache); the row decode itself is
-  * plan-time specialized per version ([[EnvelopeBuilder.envelopesStatic]]) and
-  * runs fully codegen'd on the executors. At 1000 executors the registry adds
-  * NO distributed state: each version slice is an ordinary filtered projection.
+  * plan-time specialized per version ([[EnvelopeBuilder.envelopesStaticCase]])
+  * and runs fully codegen'd on the executors. At 1000 executors the registry
+  * adds NO distributed state: the version slices are branches of one ordinary
+  * projection.
   */
 final class SchemaRegistry {
   import SchemaRegistry._
@@ -90,23 +91,23 @@ final class SchemaRegistry {
     * canal's `OnDDL` carrying the statement).
     *
     * Steps:
-    *  1. ONE control-plane pass over the batch collects, per (db, table), the
-    *     min/max `stmt_seq` plus any ALTER statements (rare by nature — the
-    *     collect is O(#tables + #DDL), the same driver-side shape as the
-    *     reference's OnDDL callback). ALTERs fold into the registry in
-    *     sequence order.
-    *  2. The batch is PERSISTED once, then sliced: one
-    *     [[EnvelopeBuilder.envelopesStatic]] projection per (registered table
-    *     × version interval that actually intersects that table's sequence
-    *     range in THIS batch). Versions outside the batch's range — the
-    *     unbounded history a long-lived stream accumulates — plan nothing, so
-    *     per-batch plan size is bounded by the drift INSIDE the batch, not by
-    *     the stream's lifetime. Each slice is a codegen'd filtered projection
-    *     over the cached batch (input scanned once, not tables×versions
-    *     times) and the union introduces no shuffle. Unregistered tables'
-    *     rows are dropped (the caller either registers schemas up front or
-    *     routes those tables to the schema-agnostic
-    *     [[EnvelopeBuilder.fromPositional]] path).
+    *  1. The batch is PERSISTED, then ONE control-plane pass over it
+    *     collects, per (db, table), the min/max `stmt_seq`, the row count and
+    *     any ALTER statements (rare by nature — the collect is
+    *     O(#tables + #DDL), the same driver-side shape as the reference's
+    *     OnDDL callback). ALTERs fold into the registry in sequence order.
+    *  2. The cached batch is decoded in ONE narrow pass: one filter, one
+    *     `posexplode` and one projection whose `CASE` picks, per row, the
+    *     column list of the (registered table × version interval) slice the
+    *     row falls in ([[EnvelopeBuilder.envelopesStaticCase]]; slices
+    *     sharing a column list share one branch). Only slices that intersect
+    *     the table's sequence range in THIS batch are planned, so per-batch
+    *     plan size is bounded by the drift INSIDE the batch, not by the
+    *     stream's lifetime. The pass keeps the batch's partitions and their
+    *     row order — a source that delivers binlog order still delivers it
+    *     decoded. Unregistered tables' rows are dropped (the caller either
+    *     registers schemas up front or routes those tables to the
+    *     schema-agnostic [[EnvelopeBuilder.fromPositional]] path).
     *
     * Per-micro-batch callers use [[decodeBatchManaged]] and call the cleanup
     * after the batch's consuming action; one-shot query paths may use this
@@ -114,30 +115,34 @@ final class SchemaRegistry {
     */
   def decodeBatch(batch: DataFrame): DataFrame = decodeBatchManaged(batch)._1
 
-  /** [[decodeBatch]] plus the unpersist handle for the batch cache. */
-  def decodeBatchManaged(batch: DataFrame): (DataFrame, () => Unit) = {
+  /** [[decodeBatch]] plus the batch's exact raw-statement count (every input
+    * row, malformed ones included, taken by the control pass) and the
+    * unpersist handle for the batch cache. */
+  def decodeBatchManaged(batch: DataFrame): (DataFrame, Long, () => Unit) = {
     // Persist the raw batch FIRST: the control pass below is an action, so
     // running it against the cached frame means ONE source scan per
-    // micro-batch (the slices' reads substitute the cached plan subtree),
+    // micro-batch (the decode's read substitutes the cached plan subtree),
     // not one for control + one for decode.
     val cached = batch.persist()
-    // Malformed lines (PERMISSIVE json parse → all-null rows) must not reach
-    // the control plane: a (null, null) group with min(stmt_seq)=null would
-    // NPE the getLong below and kill the stream — the reference's contract
-    // is log-and-keep-tailing (sync.go error tolerance).
-    val wellFormed = cached.filter(
-      col("database").isNotNull && col("table").isNotNull && col("stmt_seq").isNotNull)
-    // Pass 1 (control plane): per-table sequence ranges for version pruning +
-    // the batch's DDL. collect_list skips the nulls the `when` leaves on
-    // non-alter rows, so the payload collected is O(#DDL).
-    val ctl = wellFormed.groupBy("database", "table")
+    // Pass 1 (control plane): the raw row count, per-table sequence ranges
+    // for version pruning and the batch's DDL. collect_list skips the nulls
+    // the `when` leaves on non-alter rows, so the payload collected is
+    // O(#DDL). Malformed lines (PERMISSIVE json parse → all-null rows) are
+    // counted but must not reach the registry: a (null, null) group with
+    // min(stmt_seq)=null would NPE the getLong below and kill the stream —
+    // the reference's contract is log-and-keep-tailing (sync.go error
+    // tolerance).
+    val ctl = cached.groupBy("database", "table")
       .agg(min("stmt_seq").as("lo"), max("stmt_seq").as("hi"),
         collect_list(when(
           (col("action") === "alter" || col("action") === "schema") &&
-            col("query").isNotNull,
-          struct(col("stmt_seq"), col("action"), col("query")))).as("ddl"))
+            col("query").isNotNull && col("stmt_seq").isNotNull,
+          struct(col("stmt_seq"), col("action"), col("query")))).as("ddl"),
+        count(lit(1)).as("n"))
       .collect()
-    val ddls = ctl.flatMap { r =>
+    val rawRows = ctl.map(_.getLong(5)).sum
+    val wellFormed = ctl.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+    val ddls = wellFormed.flatMap { r =>
       r.getSeq[org.apache.spark.sql.Row](4)
         .map(d => (r.getString(0), r.getString(1), d.getLong(0),
           d.getString(1), d.getString(2)))
@@ -149,7 +154,7 @@ final class SchemaRegistry {
       case (db, tbl, seq, _, ddl) => applyAlter(db, tbl, seq, ddl)
     }
     val ranges: Map[(String, String), (Long, Long)] =
-      ctl.map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getLong(3)))).toMap
+      wellFormed.map(r => ((r.getString(0), r.getString(1)), (r.getLong(2), r.getLong(3)))).toMap
 
     // An EMPTY registry is legal while nothing has arrived (schemaFromStream
     // mode registers from the stream's own FULL-metadata observations) — but
@@ -159,31 +164,35 @@ final class SchemaRegistry {
       "SchemaRegistry.decodeBatch: batch holds rows but no table is " +
         "registered and it carried no FULL-metadata schema observation — " +
         "register schemas, or run the master with binlog_row_metadata=FULL")
-    // schema observations are control-plane only — they registered above and
-    // must not reach the envelope path (unlike alters, which DO emit an
-    // envelope: the reference surfaces DDL to subscribers)
-    val base = wellFormed.filter(col("action") =!= "schema").drop("query")
     val planned = planSlices(ranges)
-    val slices = planned.map { case (db, tbl, v, untilSeq) =>
-      val slice = base.filter(
-        col("database") === db && col("table") === tbl &&
-          col("stmt_seq") >= v.sinceSeq && col("stmt_seq") < untilSeq)
-      EnvelopeBuilder.envelopesStatic(slice, v.cols)
-        .withColumn("schema_version", lit(v.version))
+    val inSlice: Seq[(Column, Version)] = planned.map { case (db, tbl, v, untilSeq) =>
+      (col("database") === db && col("table") === tbl &&
+        col("stmt_seq") >= v.sinceSeq && col("stmt_seq") < untilSeq) -> v
     }
-    val out =
-      if (slices.nonEmpty) slices.reduceLeft(_.unionAll(_))
-      else { // batch holds no registered-table rows: empty frame, right schema.
-        // A placeholder column stands in when NOTHING is registered yet
-        // (schemaFromStream before first contact) — the envelope frame's
-        // SCHEMA does not depend on the column list, and it is empty anyway.
-        val cols = registeredTables.headOption
-          .map { case (db, tbl) => versionsOf(db, tbl).head.cols }
-          .getOrElse(Seq(Decode.ColMeta("_placeholder", "int")))
-        EnvelopeBuilder.envelopesStatic(base.filter(lit(false)), cols)
-          .withColumn("schema_version", lit(1))
+    // The predicate per distinct value of `key`, slices with that value OR'd.
+    def branches[K](key: Version => K): Seq[(Column, K)] =
+      inSlice.map(s => key(s._2)).distinct.map { k =>
+        inSlice.collect { case (p, v) if key(v) == k => p }.reduce(_ || _) -> k
       }
-    (out, () => { cached.unpersist(); () })
+    // The last branch of each CASE is its ELSE: every row left by the filter
+    // below lies in some slice.
+    val byCols = branches(_.cols)
+    val byVersion = branches(_.version)
+    val schemaVersion = byVersion.dropRight(1).foldRight(lit(byVersion.lastOption.fold(1)(_._2))) {
+      case ((p, v), rest) => when(p, lit(v)).otherwise(rest)
+    }
+    // Schema observations are control-plane only — they registered above and
+    // must not reach the envelope path (unlike alters, which DO emit an
+    // envelope: the reference surfaces DDL to subscribers). Rows in no slice
+    // (unregistered tables, malformed lines) are dropped by the same filter.
+    val rows = cached
+      .filter(col("action") =!= "schema" &&
+        inSlice.map(_._1).reduceOption(_ || _).getOrElse(lit(false)))
+      .drop("query")
+    val out = EnvelopeBuilder.envelopesStaticCase(rows, byCols.dropRight(1),
+        byCols.lastOption.fold(Seq.empty[Decode.ColMeta])(_._2))
+      .withColumn("schema_version", schemaVersion)
+    (out, rawRows, () => { cached.unpersist(); () })
   }
 
   // ------------------------------------------------------------ persistence

@@ -4,11 +4,12 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Topic filter predicate (operator F1) — the one predicate every event passes
@@ -107,6 +108,18 @@ object TopicFilter {
   def matchAny(topic: Column, filters: Seq[String]): Column =
     if (filters.isEmpty) lit(true)
     else Bridge.column(MatchAnyRegex(Bridge.expression(topic), filters))
+
+  /** Driver-side [[matchAny]] on a literal topic: the same [[MatchAnyRegex]]
+    * evaluated once, so a count taken per topic on the driver admits exactly
+    * the rows the fan-out's filter admits. */
+  def admits(topic: String, filters: Seq[String]): Boolean = admitter(filters)(topic)
+
+  /** [[admits]] with the patterns compiled once, for matching many topics
+    * against one filter set. */
+  def admitter(filters: Seq[String]): String => Boolean = {
+    val m = MatchAnyRegex(BoundReference(0, StringType, nullable = true), filters)
+    topic => m.eval(InternalRow(UTF8String.fromString(topic))) == true
+  }
 
   /** Subscriber-side topic normalization (R3): trim + lowercase + dedup,
     * preserving first-seen order (`src/services/subscribe/node.go:44-53`).

@@ -287,8 +287,6 @@ object CdcQueries {
     // Persist the decoded projection before the final sort: the range
     // sampler otherwise re-runs the whole per-version decode render (the
     // narrow subtree above the registry's cached raw batch) a second time.
-    // Sort-first is NOT safe here — the decode is a union of version slices,
-    // so input order does not survive it by contract.
     reg.decodeBatch(data.unionAll(alter))
       .select(col("stmt_seq"), col("schema_version"), col("event_type"), col("event"))
       .persist()

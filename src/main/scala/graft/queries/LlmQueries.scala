@@ -91,10 +91,11 @@ object LlmQueries {
     * so a composition of two independent sides costs max(sides) instead of
     * their sum. Returns the persisted frame and an await handle the caller
     * MUST invoke before composing the result (consumers then read a fully
-    * materialized cache). A background failure is swallowed here: the
-    * consuming action recomputes any missing partitions and surfaces the
-    * real error itself. Persist follows the one-shot catalog convention
-    * (bench clearCache / Verify's per-query clearCache / process exit). */
+    * materialized cache). A background failure is logged to stderr with its
+    * label and otherwise ignored: the consuming action recomputes any missing
+    * partitions and surfaces the real error itself. Persist follows the
+    * one-shot catalog convention (bench clearCache / Verify's per-query
+    * clearCache / process exit). */
   private def overlapMaterialize(df: DataFrame, label: String)
       : (DataFrame, () => Unit) = {
     val spark = df.sparkSession
@@ -104,7 +105,10 @@ object LlmQueries {
       // attributable in the UI/profilers
       spark.sparkContext.setJobDescription(s"overlap: $label")
       try p.write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[graft] overlap $label: background materialize failed: $e")
+      }
     }, s"graft-overlap-${label.replace(' ', '-')}")
     t.setDaemon(true)
     t.start()

@@ -115,7 +115,7 @@ object CdcStream {
     val start = if (tag == s"batch-$batchId") replayStart else next
     val (tracked, trackCleanup) = countRaw(batch, metrics)
     val (env, envCleanup) = EnvelopeBuilder.withEventIndexManaged(tracked, startIndex = start)
-    fanOutIndexed(env, () => { envCleanup(); trackCleanup() },
+    fanOutIndexed(env, None, () => { envCleanup(); trackCleanup() },
       batchId, posFile, sinks, pushTo, start, kafkaPush, metrics)
   }
 
@@ -140,7 +140,15 @@ object CdcStream {
     * POSITIONAL row images plus ALTER DDL text, and the per-row decode is
     * resolved by the drift registry ([[graft.cdc.SchemaRegistry.decodeBatch]] —
     * version live at each row's sequence). The registry's sequence-keyed
-    * versions make this replay-idempotent exactly like the index numbering. */
+    * versions make this replay-idempotent exactly like the index numbering.
+    *
+    * The batch keeps its source partitions from raw statements to indexed
+    * envelopes: the registry's control pass (which also counts the raw rows)
+    * and one narrow decode, then [[graft.cdc.EventIndexer.denseInOrderManaged]]
+    * numbers the envelopes in place — a binlog source delivers them in
+    * (`stmt_seq`, `pair_pos`) order already — and its one aggregate yields
+    * the per-topic counts that every sink's sends and the batch total are
+    * taken from. No range shuffle and no count job of its own. */
   def processPositionalBatch(batch: DataFrame, batchId: Long, posFile: String,
                              sinks: Seq[SinkConfig], registry: graft.cdc.SchemaRegistry,
                              pushTo: Option[(String, Int)] = None,
@@ -148,18 +156,24 @@ object CdcStream {
                              metrics: Option[EngineMetrics] = None): Unit = {
     val (tag, replayStart, next) = PosStore.read(posFile)
     val start = if (tag == s"batch-$batchId") replayStart else next
-    val (tracked, trackCleanup) = countRaw(batch, metrics)
-    val (decoded, decodeCleanup) = registry.decodeBatchManaged(tracked)
-    val (env, indexCleanup) = graft.cdc.EventIndexer.denseManaged(
-      decoded, Seq(col("stmt_seq"), col("pair_pos")), "event_index", start)
-    fanOutIndexed(env, () => { indexCleanup(); decodeCleanup(); trackCleanup() },
+    val (decoded, rawRows, decodeCleanup) = registry.decodeBatchManaged(batch)
+    metrics.foreach(_.rawRows.addAndGet(rawRows))
+    val (env, topicCounts, indexCleanup) = graft.cdc.EventIndexer.denseInOrderManaged(
+      decoded, Seq(col("stmt_seq"), col("pair_pos")), "topic", "event_index", start)
+    fanOutIndexed(env, Some(topicCounts), () => { indexCleanup(); decodeCleanup() },
       batchId, posFile, sinks, pushTo, start, kafkaPush, metrics)
   }
 
   /** Shared tail of the two batch paths: serialize once, offer to every sink,
     * optionally push, then commit the position. `env` must carry
-    * (database, table, event_type, time, topic, event, event_index). */
-  private def fanOutIndexed(env: DataFrame, envCleanup: () => Unit, batchId: Long,
+    * (database, table, event_type, time, topic, event, event_index).
+    * `topicCounts` is the batch's envelope count per topic when the caller
+    * already has it; otherwise one aggregate over the serialized frame takes
+    * it. Each sink's sends are the counts of the topics its filter admits
+    * ([[TopicFilter.admits]], the predicate its write filters with), and
+    * the batch total is their sum over all topics. */
+  private def fanOutIndexed(env: DataFrame, topicCounts: Option[Map[String, Long]],
+                            envCleanup: () => Unit, batchId: Long,
                             posFile: String, sinks: Seq[SinkConfig],
                             pushTo: Option[(String, Int)], start: Long,
                             kafkaPush: Option[KafkaPush] = None,
@@ -168,6 +182,9 @@ object CdcStream {
       .select(col("topic"), col("envelope"), col("event_index"))
       .persist()
     try {
+      val counts = topicCounts.getOrElse(
+        out.groupBy(col("topic")).count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap)
       // Serialize once, offer to every sink — the reference's notify loop
       // (`handler.go:81-98`), with per-sink F1 filters (`groups.go:41-51`).
       sinks.foreach { s =>
@@ -177,9 +194,9 @@ object CdcStream {
           else filtered.select(col("envelope").as("value"))
         lines.write.mode("append").text(s.dir)
         // per-sink send count (the reference's per-connection `times`,
-        // tcp.go:436): a count over the PERSISTED frame — cached scan, no
-        // recompute of the envelope pipeline
-        metrics.foreach(_.addSink(s.name, filtered.count()))
+        // tcp.go:436), from the per-topic counts: no job of its own
+        metrics.foreach(_.addSink(s.name,
+          counts.collect { case (t, n) if TopicFilter.admits(t, s.filters) => n }.sum))
       }
       pushTo.foreach { case (host, port) =>
         // Delivery is AT-LEAST-ONCE: the push runs before PosStore.write and
@@ -189,7 +206,7 @@ object CdcStream {
         // across retries AND batch replays (same batch ⇒ same start index) —
         // which is the consumer-side dedup key, mirroring the reference's
         // at-least-once offset contract (`handler.go:249`, XID-commit saves).
-        // Sort, then coalesce(1): the single task concatenates the range-sorted
+        // Sort, then coalesce(1): the single task concatenates the sorted
         // partitions in order, so ONE executor task streams the batch to the
         // push tier in event_index order through one socket, memory-bounded
         // (iterator, never materialized). The push tier is single-node by
@@ -215,8 +232,8 @@ object CdcStream {
         // Same at-least-once contract as the TCP push (runs before
         // PosStore.write; event_index in the envelope is the consumer-side
         // dedup key), but delivery is per-partition on the executors.
-        // Per-table ORDER requires co-location first: `out` is
-        // range-partitioned by event_index, which spreads one table's rows
+        // Per-table ORDER requires co-location first: `out` keeps the
+        // batch's source (or range) partitions, which spread one table's rows
         // across partitions — concurrent per-partition producers would
         // interleave them on the table's Kafka partition in task-race order.
         // Repartition by topic (all of a table's rows through ONE task) and
@@ -231,7 +248,7 @@ object CdcStream {
             .select(col("topic"), col("envelope")),
           host, port, kafkaTopic)
       }
-      val n = out.count()
+      val n = counts.values.sum
       metrics.foreach { m => m.envelopes.addAndGet(n); m.batches.incrementAndGet() }
       PosStore.write(posFile, s"batch-$batchId", start, start + n)
     } finally {

@@ -11,13 +11,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * (`/root/reference/src/library/client/tcp.go:436-443`: `client.times` /
   * elapsed). The engine-side equivalents live here: envelopes processed,
   * per-sink send counts, batch count, and lifetime rates — updated by the
-  * batch pipeline on the driver (counts come from the already-persisted
-  * envelope frame, no extra scan of the input), folded together with
+  * batch pipeline on the driver (counts come from aggregates the batch runs
+  * anyway, no extra scan of the input), folded together with
   * Spark's own per-batch progress by [[GraftQueryListener]], and readable
   * from the control plane or tests at any time. Thread-safe, lock-free. */
 final class EngineMetrics {
   /** Raw statement rows entering the pipeline — counted by the batch
-    * pipeline itself (one scan of the raw frame). NOT Spark's
+    * pipeline itself (the positional decode's control pass, or a count over
+    * the persisted raw frame on the entries path). NOT Spark's
     * `numInputRows`: that metric counts rows READ, and an un-persisted
     * frame consumed by several actions inside `foreachBatch` is re-scanned,
     * inflating it (a 3-line batch reports 6). */

@@ -19,38 +19,44 @@ import graft.cdc.TopicFilter
   * snapshot converts to [[CdcStream.SinkConfig]]s for the fan-out.
   */
 final class SubscriberRegistry {
-  private val subs = new ConcurrentHashMap[String, Vector[String]]()
+  import SubscriberRegistry.Sub
+
+  private val subs = new ConcurrentHashMap[String, Sub]()
 
   /** Register (or touch) a subscriber with no topics (= match-all). */
-  def connect(subscriber: String): Unit = subs.putIfAbsent(subscriber, Vector.empty)
+  def connect(subscriber: String): Unit = subs.putIfAbsent(subscriber, Sub(Vector.empty))
 
   /** CMD_SET_PRO: add one topic pattern (trim/lowercase/dedup). */
   def addTopic(subscriber: String, topic: String): Unit = {
     val t = topic.trim.toLowerCase
     if (t.nonEmpty)
       subs.compute(subscriber, (_, cur) => {
-        val v = Option(cur).getOrElse(Vector.empty)
-        if (v.contains(t)) v else v :+ t
+        val v = Option(cur).fold(Vector.empty[String])(_.topics)
+        if (v.contains(t)) cur else Sub(v :+ t)
       })
   }
 
   def disconnect(subscriber: String): Unit = subs.remove(subscriber)
 
   def topicsOf(subscriber: String): Seq[String] =
-    Option(subs.get(subscriber)).getOrElse(Vector.empty)
+    Option(subs.get(subscriber)).fold(Seq.empty[String])(_.topics)
 
-  /** Would this subscriber receive an event with the given topic? */
+  /** Would this subscriber receive an event with the given topic? The
+    * fan-out's own predicate ([[TopicFilter.admits]]), its patterns compiled
+    * once per topic set. */
   def matches(subscriber: String, eventTopic: String): Boolean =
-    TopicFilter.normalizeTopics(topicsOf(subscriber)) match {
-      case Nil => true
-      case fs => fs.exists(f =>
-        scala.util.Try(java.util.regex.Pattern.compile(f)).toOption
-          .exists(_.matcher(eventTopic).find()))
-    }
+    Option(subs.get(subscriber)).getOrElse(Sub(Vector.empty)).admits(eventTopic)
 
   /** Snapshot as fan-out sinks rooted under `baseDir`. */
   def asSinks(baseDir: String): Seq[CdcStream.SinkConfig] =
-    subs.asScala.toSeq.sortBy(_._1).map { case (name, topics) =>
-      CdcStream.SinkConfig(name, s"$baseDir/$name", topics)
+    subs.asScala.toSeq.sortBy(_._1).map { case (name, sub) =>
+      CdcStream.SinkConfig(name, s"$baseDir/$name", sub.topics)
     }
+}
+
+object SubscriberRegistry {
+  private final case class Sub(topics: Vector[String]) {
+    lazy val admits: String => Boolean =
+      TopicFilter.admitter(TopicFilter.normalizeTopics(topics))
+  }
 }

@@ -442,6 +442,82 @@ class EngineSpec extends SparkSpec {
     } finally { handle.stop(); broker.stop() }
   }
 
+  test("binary DSv2 batch keeps its source partitions: no range shuffle, exact " +
+    "raw rows and per-sink sends, dense indices in binlog order") {
+    import graft.source.BinlogFixtureWriter
+    import graft.source.BinlogWire._
+    val (in, cp, out) = (tmp(), tmp(), tmp())
+    // two binlog files: two source partitions, the second's bytes after the first's
+    def binlog(name: String, id: Int): Unit = {
+      val w = new BinlogFixtureWriter(checksum = true)
+      w.fde()
+      val cols = Seq(TYPE_LONG -> w.mNone, TYPE_VARCHAR -> w.mLe2(40))
+      w.tableMap(10L, 5L, "shop", "user", cols)
+      w.tableMap(10L, 6L, "shop", "item", cols)
+      def img(i: Int, v: String) = Seq(w.vLong(i), w.vVarchar(v, 40))
+      w.rows(11L, WRITE_ROWS_V2, 5L, 2, Seq(img(id, "a"), img(id + 1, "b")))
+      w.rows(12L, UPDATE_ROWS_V2, 5L, 2,
+        Seq(img(id, "a"), img(id, "A"), img(id + 1, "b"), img(id + 1, "B"))) // two pairs
+      w.rows(13L, WRITE_ROWS_V2, 6L, 2, Seq(img(id, "i")))
+      w.rows(14L, DELETE_ROWS_V2, 5L, 2, Seq(img(id, "A")))
+      Files.write(in.resolve(name), w.bytes)
+    }
+    binlog("binlog.000001", 1)
+    binlog("binlog.000002", 100)
+    val reg = new graft.cdc.SchemaRegistry
+    Seq("user", "item").foreach(t => reg.register("shop", t, Seq(
+      graft.cdc.Decode.ColMeta("id", "int(11)"), graft.cdc.Decode.ColMeta("v", "varchar(40)"))))
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val handle = Engine.start(spark, Engine.Config(
+      inputDir = in.toString,
+      checkpointDir = cp.toString,
+      posFile = s"$out/pos.bin",
+      sinks = Seq(
+        CdcStream.SinkConfig("all", s"$out/all"),
+        CdcStream.SinkConfig("users", s"$out/users", Seq("\\.user$")),
+        CdcStream.SinkConfig("items", s"$out/items", Seq("item"))),
+      useDsv2Source = true,
+      wireFormat = Some("binary"),
+      schemaRegistry = Some(reg)))
+    try {
+      assert(handle.awaitTermination(120000))
+      val m = handle.metrics
+      assert(m.batches.get === 1, m.render)
+      assert(m.rawRows.get === 8, s"4 row events per file: ${m.render}")
+      assert(m.envelopes.get === 12, s"2 inserts + 2 update pairs + 1 + 1 per file: ${m.render}")
+      assert(m.sinkCounts === Map("all" -> 12L, "users" -> 10L, "items" -> 2L), m.render)
+      assert(readSink(s"$out/users").size === 10 && readSink(s"$out/items").size === 2)
+      val byIndex = readSink(s"$out/all").map { l =>
+        ("\"event_index\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong,
+          "\"id\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toInt)
+      }.sorted
+      assert(byIndex.map(_._1) === (1L to 12L), "dense from 1")
+      assert(byIndex.take(6).forall(_._2 < 100) && byIndex.drop(6).forall(_._2 >= 100),
+        s"indices follow binlog order across the two files: $byIndex")
+      // the listener bus delivers in order: once the batch's three sink
+      // writes are seen, every earlier execution of the batch is too
+      val deadline = System.currentTimeMillis() + 30000
+      def writes = plans.asScala.count(_.contains("InsertIntoHadoopFsRelationCommand"))
+      while (writes < 3 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(writes === 3)
+      assert(plans.asScala.exists(_.contains("__pid")), "the index aggregate ran")
+      assert(!plans.asScala.exists(_.toLowerCase.contains("rangepartitioning")),
+        plans.asScala.filter(_.toLowerCase.contains("rangepartitioning")).mkString("\n"))
+    } finally {
+      handle.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("push tier: executors stream envelopes to the pub/sub service; no driver collect") {
     val (in, cp, out) = (tmp(), tmp(), tmp())
     Files.write(in.resolve("bin.0001"),

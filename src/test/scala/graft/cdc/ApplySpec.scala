@@ -177,7 +177,7 @@ class ApplySpec extends SparkSpec {
       Seq("a b", "c"), Seq("a", "b c"), Seq("a", "b", "c"),
       Seq(null, "x"), Seq("null", "x"), Seq("N", "x"), Seq("", "x"), Seq("x", ""),
       Seq("1:a", "b"), Seq("1", ":ab"), Seq("12", "ab"), Seq("1", "2ab"),
-      Seq("a b", "c"), Seq("a", " bc"))
+      Seq("a\u0000b", "c"), Seq("a", "\u0000bc"))
     val encoded = tricky.map(p => enc(p: _*))
     assert(encoded.distinct.length === tricky.length,
       s"collision among: ${tricky.zip(encoded).mkString("; ")}")

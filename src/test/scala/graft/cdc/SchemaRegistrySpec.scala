@@ -207,11 +207,55 @@ class SchemaRegistrySpec extends SparkSpec {
     val acc = spark.sparkContext.longAccumulator("scanned")
     val counted = df.mapPartitions { it => it.map { r => acc.add(1); r } }(
       org.apache.spark.sql.Encoders.row(df.schema))
-    val (out, cleanup) = reg.decodeBatchManaged(counted)
+    val (out, _, cleanup) = reg.decodeBatchManaged(counted)
     try {
       assert(out.count() === 500)
       assert(acc.value <= 4L * 500,
         s"input scanned ${acc.value / 500.0}x; expected ~2 passes, not per-slice rescans")
+    } finally cleanup()
+  }
+
+  test("one-pass decode equals the per-slice union: two tables sharing a column " +
+    "list plus an ALTERed version, updates, deletes and the alter itself") {
+    import spark.implicits._
+    val reg = new SchemaRegistry
+    val cols = Seq(Decode.ColMeta("a", "int"), Decode.ColMeta("b", "varchar(8)"))
+    reg.register("d", "t1", cols)
+    reg.register("d", "t2", cols)
+    reg.register("d", "gone", cols) // registered, absent from the batch
+    val raw = Seq(
+      ("d", "t1", "insert", 1L, 10L, Seq(Seq("1", "x"), Seq("2", "y")), null: String),
+      ("d", "t2", "update", 1L, 20L, Seq(Seq("3", "p"), Seq("3", "q"), Seq("4", "r"),
+        Seq("4", "s")), null: String),
+      ("d", "t1", "alter", 1L, 30L, null: Seq[Seq[String]],
+        "ALTER TABLE d.t1 ADD COLUMN c int FIRST"),
+      ("d", "t1", "update", 1L, 40L, Seq(Seq("7", "1", "x"), Seq("8", "1", "z")), null: String),
+      ("d", "t2", "delete", 1L, 50L, Seq(Seq("3", "q")), null: String),
+      ("d", "other", "insert", 1L, 60L, Seq(Seq("9")), null: String), // unregistered
+      ("d", "t1", "insert", 1L, 70L, Seq(Seq("5", "6", "w")), null: String)
+    ).toDF("database", "table", "action", "ts", "stmt_seq", "rows", "query").repartition(3)
+    val (out, rawRows, cleanup) = reg.decodeBatchManaged(raw)
+    try {
+      assert(rawRows === 7)
+      // the old shape, built from the slices the registry plans for this batch
+      val ranges = raw.groupBy("database", "table").agg(min("stmt_seq"), max("stmt_seq"))
+        .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+        .toMap
+      val slices = reg.planSlices(ranges)
+      assert(slices.map(s => (s._2, s._3.version)) === Seq(("t1", 1), ("t1", 2), ("t2", 1)))
+      val union = slices.map { case (db, tbl, v, untilSeq) =>
+        EnvelopeBuilder.envelopesStatic(raw.filter(col("database") === db &&
+            col("table") === tbl && col("stmt_seq") >= v.sinceSeq &&
+            col("stmt_seq") < untilSeq).drop("query"), v.cols)
+          .withColumn("schema_version", lit(v.version))
+      }.reduce(_.unionAll(_))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+      assert(out.columns.toSeq === union.columns.toSeq)
+      assert(rows(out) === rows(union))
+      assert(out.count() === 8, "2 inserts + 2 update pairs + alter + 1 pair + delete + insert")
+      assert(!out.queryExecution.executedPlan.toString.contains("Union"),
+        "one narrow pass, not a union of slices")
     } finally cleanup()
   }
 
@@ -222,7 +266,7 @@ class SchemaRegistrySpec extends SparkSpec {
     val raw = Seq(
       ("d", "mystery", "insert", 1L, 10L, Seq(Seq("1")), null: String)
     ).toDF("database", "table", "action", "ts", "stmt_seq", "rows", "query")
-    val (out, cleanup) = reg.decodeBatchManaged(raw)
+    val (out, _, cleanup) = reg.decodeBatchManaged(raw)
     try {
       assert(out.count() === 0)
       // schema must still be the envelope schema so downstream union/index
@@ -290,10 +334,11 @@ class SchemaRegistrySpec extends SparkSpec {
           Seq(Seq("1", "x")), null),
         org.apache.spark.sql.Row(null, null, null, null, null, null, null))), // malformed line
       graft.streaming.CdcStream.rawPositionalSchema)
-    val (out, done) = reg.decodeBatchManaged(batch)
+    val (out, rawRows, done) = reg.decodeBatchManaged(batch)
     val rows = out.collect()
     done()
     assert(rows.length === 1, "the well-formed row decodes; the malformed one is dropped")
+    assert(rawRows === 2, "the control pass counts every raw row, malformed ones included")
   }
 
   // --------------------------------------------------------------------------

@@ -36,6 +36,7 @@ class TopicFilterSpec extends SparkSpec {
     cases.foreach { case (fs, t, want) =>
       assert(oracle(fs, t) === want, s"oracle self-check $fs $t")
       assert(viaDf(fs, Seq(t)) === Seq(want), s"matchAny($fs, $t)")
+      assert(TopicFilter.admits(t, fs) === want, s"admits($t, $fs)")
     }
   }
 
@@ -75,6 +76,8 @@ class TopicFilterSpec extends SparkSpec {
       val got = viaDf(filters, topics)
       val want = topics.map(t => oracle(filters, t))
       assert(got === want, s"round $round filters=$filters")
+      assert(topics.map(TopicFilter.admitter(filters)) === want,
+        s"driver-side admits, round $round filters=$filters")
     }
   }
 }
