@@ -9,8 +9,16 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/src/library/binlog/util.go:61-146`): the binlog wire gives
   * signed integers; columns declared `unsigned` must be reinterpreted by adding
   * the type's modulus, ENUM ordinals become labels, SET bitmasks become
-  * comma-joined labels. Everything is built from codegen'd Spark built-ins
-  * (when/arithmetic/higher-order functions) — no UDFs in the decode path.
+  * comma-joined labels.
+  *
+  * Two paths decode the same bytes:
+  *  - [[toJsonFragment]], schema-agnostic: the column metadata rides each
+  *    row and the `rawType` dispatch is a per-row `CASE` of Spark built-ins
+  *    (when/arithmetic/higher-order functions);
+  *  - [[RowImageJson]], for a column list known at plan time (the schema
+  *    registry's path, "typed projection once the schema is registered",
+  *    SURVEY §1.5): a native kernel that resolves the dispatch once and
+  *    renders a whole row image in one pass.
   *
   * Values arrive as strings (the fixture carrier for dynamically-typed row
   * images); the column's `rawType` decides interpretation, mirroring how the
@@ -48,50 +56,15 @@ object Decode {
         transform(setValues, (s, i) => when(shl(lit(1L), i).bitwiseAND(mask) =!= 0, s)),
         x => x.isNotNull))
 
-  /** Static column metadata, when the table schema is known at plan time. */
+  /** Static column metadata, when the table schema is known at plan time
+    * (the input of [[RowImageJson]]). */
   final case class ColMeta(name: String, rawType: String, unsigned: Boolean = false,
                            enumValues: Seq[String] = Nil, setValues: Seq[String] = Nil)
 
-  /** Plan-time-resolved decode: the `rawType` dispatch happens in Scala while
-    * building the plan, so the emitted expression is exactly the one branch
-    * the column needs — no per-row type dispatch, fully codegen-friendly.
-    * This is the "typed projection once the schema is registered" path
-    * (SURVEY §1.5); [[toJsonFragment]] remains the schema-agnostic fallback. */
-  def toJsonFragmentStatic(value: Column, m: ColMeta): Column = {
-    val vLong = value.cast("long")
-    val decoded =
-      if (m.rawType.startsWith("enum"))
-        Json.str(enumLabel(vLong, array(m.enumValues.map(lit): _*)))
-      else if (m.rawType.startsWith("set"))
-        Json.str(setLabels(vLong, array(m.setValues.map(lit): _*)))
-      else if (m.rawType.startsWith("tinyint"))
-        Json.num(if (m.unsigned) when(vLong < 0, vLong + 256L).otherwise(vLong) else vLong)
-      else if (m.rawType.startsWith("smallint"))
-        Json.num(if (m.unsigned) when(vLong < 0, vLong + 65536L).otherwise(vLong) else vLong)
-      else if (m.rawType.startsWith("mediumint") || m.rawType.startsWith("int")) {
-        val add = if (m.rawType.startsWith("int")) 4294967296L else 1L << 24
-        Json.num(if (m.unsigned) when(vLong < 0, vLong + add).otherwise(vLong) else vLong)
-      } else if (m.rawType.startsWith("bigint"))
-        Json.num(
-          if (m.unsigned)
-            when(vLong < 0,
-              (vLong.cast("decimal(20,0)") + lit(new java.math.BigDecimal("18446744073709551616")))
-                .cast("decimal(20,0)"))
-              .otherwise(vLong.cast("decimal(20,0)"))
-          else vLong)
-      else if (m.rawType.startsWith("float") || m.rawType.startsWith("double") ||
-               m.rawType.startsWith("decimal"))
-        // reference parity: float64 + Go json rendering (`123`, not `123.0`;
-        // plain decimal up to 1e21, not Java's scientific from 1e7)
-        GoFloat.num(value)
-      else Json.str(value)
-    when(value.isNull, lit("null")).otherwise(decoded)
-  }
-
   /** Full decode of one positional value to a JSON fragment (see [[Json]]).
     * `value` is the raw string carrier; `meta` the column metadata struct.
-    * Schema-agnostic (runtime dispatch on rawType) — use
-    * [[toJsonFragmentStatic]] when the schema is known at plan time. */
+    * Schema-agnostic (runtime dispatch on rawType) — use [[RowImageJson]]
+    * when the schema is known at plan time. */
   def toJsonFragment(value: Column, meta: Column): Column = {
     val rawType = meta.getField("rawType")
     val uns     = meta.getField("unsigned")

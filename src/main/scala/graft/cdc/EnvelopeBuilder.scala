@@ -23,9 +23,11 @@ import org.apache.spark.sql.functions._
   * exactly one with NO event payload (`handler.go:101-110`).
   *
   * JSON key order is alphabetical, matching Go's `json.Marshal` of maps — the
-  * reference's observable wire format. Everything here is Spark built-ins
-  * (higher-order functions + posexplode) and stays partition-local: no shuffle
-  * is introduced until/unless the caller asks for a global event index.
+  * reference's observable wire format. The schema-agnostic path is Spark
+  * built-ins (higher-order functions + posexplode); the plan-time-schema path
+  * ([[envelopesStaticCase]]) renders each image with the [[RowImageJson]]
+  * kernel. Both stay partition-local: no shuffle is introduced until/unless
+  * the caller asks for a global event index.
   */
 object EnvelopeBuilder {
 
@@ -149,39 +151,16 @@ object EnvelopeBuilder {
                      Decode.toJsonFragment(try_element_at(r, (i + 1).cast("int")), c).as("v"))))))
       .drop("cols")
 
-  /** Plan-time rendering of one positional row image to its data-JSON object,
-    * keys pre-sorted and pre-escaped in Scala, each column's decode resolved
-    * statically ([[Decode.toJsonFragmentStatic]]). No nested lambdas, no
-    * runtime sorting — the whole thing is a flat `concat` that codegens. */
-  def rowJsonStatic(row: Column, cols: Seq[Decode.ColMeta]): Column = {
-    // Sort keys by UTF-8 BYTES, not Scala's default String order (UTF-16
-    // code units): the two differ for supplementary-plane names (U+FFFD vs
-    // an emoji sort opposite ways), and both Go's json.Marshal and the
-    // dynamic path's array_sort (UTF8String) compare UTF-8 bytes — the
-    // byte-identity contract with `envelopes` spans ALL names, not just BMP.
-    val utf8Order = new Ordering[String] {
-      def compare(a: String, b: String): Int =
-        java.util.Arrays.compareUnsigned(
-          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    val parts: Seq[Column] = cols.zipWithIndex.sortBy(_._1.name)(utf8Order).zipWithIndex.flatMap {
-      case ((m, i), outPos) =>
-        val key = (if (outPos == 0) "{\"" else ",\"") +
-          m.name.replace("\\", "\\\\").replace("\"", "\\\"") + "\":"
-        Seq(lit(key), Decode.toJsonFragmentStatic(try_element_at(row, lit(i + 1)), m))
-    }
-    concat(parts :+ lit("}"): _*)
-  }
-
   /** The fast-path equivalent of `fromPositional` + [[envelopes]] for a
     * statically-known schema: input has `rows ARRAY<ARRAY<STRING>>`; output is
     * identical to [[envelopes]] (same columns, same JSON bytes).
     *
     * Shape matters: the explode happens FIRST, carrying only row-array
-    * references (cheap lambdas); the per-column decode + JSON concat then runs
-    * on flat exploded columns — ordinary expressions inside whole-stage
-    * codegen, no interpreted higher-order functions on the hot path. */
+    * references (cheap lambdas); each exploded image is then rendered by the
+    * [[RowImageJson]] kernel, whose generated code is one call per image
+    * whatever the column count — the stage stays inside whole-stage
+    * codegen's method-size limit however many tables and versions it
+    * renders, with no interpreted higher-order functions on the hot path. */
   def envelopesStatic(raw: DataFrame, cols: Seq[Decode.ColMeta]): DataFrame =
     envelopesStaticCase(raw, Nil, cols)
 
@@ -195,10 +174,10 @@ object EnvelopeBuilder {
                           otherwise: Seq[Decode.ColMeta]): DataFrame = {
     val isUpdate = col("event_type") === "update"
     def updateJson(cols: Seq[Decode.ColMeta]): Column =
-      concat(lit("{\"data\":{\"new_data\":"), rowJsonStatic(col("pair.new"), cols),
-             lit(",\"old_data\":"), rowJsonStatic(col("pair.old"), cols), lit("}}"))
+      concat(lit("{\"data\":{\"new_data\":"), RowImageJson(col("pair.new"), cols),
+             lit(",\"old_data\":"), RowImageJson(col("pair.old"), cols), lit("}}"))
     def rowJson(cols: Seq[Decode.ColMeta]): Column =
-      concat(lit("{\"data\":"), rowJsonStatic(col("pair.old"), cols), lit("}"))
+      concat(lit("{\"data\":"), RowImageJson(col("pair.old"), cols), lit("}"))
     // one flat CASE: alter, then (update, other) per branch, then `otherwise`
     val event = branches.foldLeft(
         when(col("event_type") === "alter", lit(null).cast("string"))) {

@@ -94,10 +94,15 @@ object EventIndexer {
     * the partition's base plus the row's local position, exactly as in
     * [[denseManaged]] — which is also the fallback when the ranges overlap
     * (a source that does not deliver in order). Either way the result
-    * equals [[dense]]'s and the counts come from the same aggregate. */
+    * equals [[dense]]'s and the counts come from the same aggregate.
+    *
+    * The Boolean is true when the in-place branch was taken: the result's
+    * partitions then follow each other in `order` order, each sorted within,
+    * so concatenating them in partition order (`coalesce(1)`) reads the rows
+    * in index order with no further sort. */
   def denseInOrderManaged(df: DataFrame, order: Seq[Column], countBy: String,
                           outCol: String, start: Long = 0L)
-      : (DataFrame, Map[String, Long], () => Unit) = {
+      : (DataFrame, Map[String, Long], Boolean, () => Unit) = {
     val local = df.sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id())
@@ -118,10 +123,10 @@ object EventIndexer {
         .withColumn(outCol, element_at(typedLit(bases), col("__pid")) +
           (col("__mid") - shiftleft(col("__pid").cast("long"), 33)) + lit(start + 1))
         .drop("__pid", "__mid")
-      (out, counts, () => { local.unpersist(); () })
+      (out, counts, true, () => { local.unpersist(); () })
     } else {
       val (out, cleanup) = denseManaged(local.drop("__pid", "__mid"), order, outCol, start)
-      (out, counts, () => { cleanup(); local.unpersist(); () })
+      (out, counts, false, () => { cleanup(); local.unpersist(); () })
     }
   }
 

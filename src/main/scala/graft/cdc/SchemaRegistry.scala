@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   *
   * Registry state is driver-side metadata (tables × versions — control-plane
   * scale, like the reference's `schema.Table` cache); the row decode itself is
-  * plan-time specialized per version ([[EnvelopeBuilder.envelopesStaticCase]])
-  * and runs fully codegen'd on the executors. At 1000 executors the registry
+  * plan-time specialized per version ([[EnvelopeBuilder.envelopesStaticCase]]:
+  * one [[RowImageJson]] kernel per column list) and runs inside whole-stage
+  * codegen on the executors, whose generated code does not grow with the
+  * number of columns, tables or versions. At 1000 executors the registry
   * adds NO distributed state: the version slices are branches of one ordinary
   * projection.
   */
@@ -100,7 +102,8 @@ final class SchemaRegistry {
     *     `posexplode` and one projection whose `CASE` picks, per row, the
     *     column list of the (registered table × version interval) slice the
     *     row falls in ([[EnvelopeBuilder.envelopesStaticCase]]; slices
-    *     sharing a column list share one branch). Only slices that intersect
+    *     sharing a column list share one branch, whose images one
+    *     [[RowImageJson]] kernel renders). Only slices that intersect
     *     the table's sequence range in THIS batch are planned, so per-batch
     *     plan size is bounded by the drift INSIDE the batch, not by the
     *     stream's lifetime. The pass keeps the batch's partitions and their

@@ -143,7 +143,7 @@ object CdcQueries {
     * (incl. the RawType mediumint-vs-int 2^24/2^32 rule), ENUM labels, SET
     * bitmask join, short-row NULL padding. Derived from `lineitem`. */
   /** The q19 fixture schema — statically known, so the decode is a plan-time
-    * typed projection ([[graft.cdc.Decode.toJsonFragmentStatic]]); the
+    * rendering ([[graft.cdc.RowImageJson]]); the
     * schema-agnostic runtime path stays covered by the golden test suite. */
   val q19Cols: Seq[graft.cdc.Decode.ColMeta] = Seq(
     graft.cdc.Decode.ColMeta("id", "int(11)"),

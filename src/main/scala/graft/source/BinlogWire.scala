@@ -124,7 +124,7 @@ object BinlogWire {
 
     /** [[graft.cdc.Decode.ColMeta]] synthesized from FULL optional metadata —
       * defined iff the master sent COLUMN_NAME TLVs. The rawType strings
-      * carry exactly what [[graft.cdc.Decode.toJsonFragmentStatic]] dispatches
+      * carry exactly what [[graft.cdc.RowImageJson]] dispatches
       * on (prefix + unsigned marker), so envelopes decoded through this path
       * are byte-identical to registry-driven decode. */
     def toColMeta: Option[Seq[graft.cdc.Decode.ColMeta]] = colNames.map { names =>

@@ -774,7 +774,9 @@ class CdcReaderFactory(
     new PartitionReader[InternalRow] {
       private val wire = mkReader(p)
       private val pattern = p.filter.map(Pattern.compile)
+      private val fileName = UTF8String.fromString(Paths.get(p.file).getFileName.toString)
       private var line: String = _
+      private var key: String = _       // `line`'s routing key, taken once
       private var emittedAt: Long = -1L // byte offset of `line` within the file
 
       override def next(): Boolean = {
@@ -782,9 +784,9 @@ class CdcReaderFactory(
         // filtered statements (canal.go:243-280 semantics).
         var n = wire.nextLine()
         while (n != null) {
-          val key = CdcSource.dbTableOf(n._2)
-          if (pattern.forall(_.matcher(key).find())) {
-            emittedAt = n._1; line = n._2
+          val k = CdcSource.dbTableOf(n._2)
+          if (pattern.forall(_.matcher(k).find())) {
+            emittedAt = n._1; line = n._2; key = k
             return true
           }
           n = wire.nextLine()
@@ -795,9 +797,9 @@ class CdcReaderFactory(
       override def get(): InternalRow =
         InternalRow(
           UTF8String.fromString(line),
-          UTF8String.fromString(Paths.get(p.file).getFileName.toString),
+          fileName,
           p.globalBase + emittedAt,
-          UTF8String.fromString(CdcSource.dbTableOf(line)))
+          UTF8String.fromString(key))
 
       override def close(): Unit = wire.close()
     }

@@ -115,7 +115,7 @@ object CdcStream {
     val start = if (tag == s"batch-$batchId") replayStart else next
     val (tracked, trackCleanup) = countRaw(batch, metrics)
     val (env, envCleanup) = EnvelopeBuilder.withEventIndexManaged(tracked, startIndex = start)
-    fanOutIndexed(env, None, () => { envCleanup(); trackCleanup() },
+    fanOutIndexed(env, None, inIndexOrder = false, () => { envCleanup(); trackCleanup() },
       batchId, posFile, sinks, pushTo, start, kafkaPush, metrics)
   }
 
@@ -148,7 +148,9 @@ object CdcStream {
     * numbers the envelopes in place — a binlog source delivers them in
     * (`stmt_seq`, `pair_pos`) order already — and its one aggregate yields
     * the per-topic counts that every sink's sends and the batch total are
-    * taken from. No range shuffle and no count job of its own. */
+    * taken from. No range shuffle and no count job of its own; when the
+    * indexer kept the source partitions, the TCP push streams them as they
+    * are, with no sort either. */
   def processPositionalBatch(batch: DataFrame, batchId: Long, posFile: String,
                              sinks: Seq[SinkConfig], registry: graft.cdc.SchemaRegistry,
                              pushTo: Option[(String, Int)] = None,
@@ -158,9 +160,9 @@ object CdcStream {
     val start = if (tag == s"batch-$batchId") replayStart else next
     val (decoded, rawRows, decodeCleanup) = registry.decodeBatchManaged(batch)
     metrics.foreach(_.rawRows.addAndGet(rawRows))
-    val (env, topicCounts, indexCleanup) = graft.cdc.EventIndexer.denseInOrderManaged(
+    val (env, topicCounts, inOrder, indexCleanup) = graft.cdc.EventIndexer.denseInOrderManaged(
       decoded, Seq(col("stmt_seq"), col("pair_pos")), "topic", "event_index", start)
-    fanOutIndexed(env, Some(topicCounts), () => { indexCleanup(); decodeCleanup() },
+    fanOutIndexed(env, Some(topicCounts), inOrder, () => { indexCleanup(); decodeCleanup() },
       batchId, posFile, sinks, pushTo, start, kafkaPush, metrics)
   }
 
@@ -171,9 +173,11 @@ object CdcStream {
     * already has it; otherwise one aggregate over the serialized frame takes
     * it. Each sink's sends are the counts of the topics its filter admits
     * ([[TopicFilter.admits]], the predicate its write filters with), and
-    * the batch total is their sum over all topics. */
+    * the batch total is their sum over all topics. `inIndexOrder` says that
+    * `env`'s partitions already follow each other in `event_index` order,
+    * each sorted within ([[graft.cdc.EventIndexer.denseInOrderManaged]]). */
   private def fanOutIndexed(env: DataFrame, topicCounts: Option[Map[String, Long]],
-                            envCleanup: () => Unit, batchId: Long,
+                            inIndexOrder: Boolean, envCleanup: () => Unit, batchId: Long,
                             posFile: String, sinks: Seq[SinkConfig],
                             pushTo: Option[(String, Int)], start: Long,
                             kafkaPush: Option[KafkaPush] = None,
@@ -206,13 +210,16 @@ object CdcStream {
         // across retries AND batch replays (same batch ⇒ same start index) —
         // which is the consumer-side dedup key, mirroring the reference's
         // at-least-once offset contract (`handler.go:249`, XID-commit saves).
-        // Sort, then coalesce(1): the single task concatenates the sorted
-        // partitions in order, so ONE executor task streams the batch to the
-        // push tier in event_index order through one socket, memory-bounded
-        // (iterator, never materialized). The push tier is single-node by
-        // nature (like the reference's notify loop); the 100 TB fan-out path
-        // remains the Kafka-shaped sink.
-        out.orderBy(col("event_index"))
+        // coalesce(1): the single task concatenates the partitions in
+        // order, so ONE executor task streams the batch to the push tier in
+        // event_index order through one socket, memory-bounded (iterator,
+        // never materialized). Partitions already in index order (the
+        // in-place index) stream as they are; any other layout is range-
+        // sorted first (the entries-form prefix sum's window re-hashes its
+        // partitions). The push tier is single-node by nature (like the
+        // reference's notify loop); the 100 TB fan-out path remains the
+        // Kafka-shaped sink.
+        (if (inIndexOrder) out else out.orderBy(col("event_index")))
           .select(col("topic"), col("envelope"))
           .coalesce(1)
           .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>

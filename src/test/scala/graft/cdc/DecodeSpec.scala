@@ -93,13 +93,16 @@ class DecodeSpec extends SparkSpec {
     cases.foreach { case (in, want) =>
       assert(decode(in, m("decimal(30,10)")) === want, s"decimal carrier $in")
     }
-    // static (plan-time) path must agree
+    // the plan-time row-image kernel must agree, interpreted and generated
     import spark.implicits._
-    cases.foreach { case (in, want) =>
-      val got = Seq(in).toDF("v")
-        .select(Decode.toJsonFragmentStatic(col("v"), Decode.ColMeta("c", "double")).as("r"))
-        .collect()(0).getString(0)
-      assert(got === want, s"static path, double carrier $in")
+    val df = cases.map(_._1).toDF("v")
+    Seq(df, df.repartition(2)).foreach { in =>
+      val got = in.select(col("v"),
+          RowImageJson(array(col("v")), Seq(Decode.ColMeta("c", "double"))).as("r"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      cases.foreach { case (v, want) =>
+        assert(got(v) === s"""{"c":$want}""", s"kernel, double carrier $v")
+      }
     }
   }
 

@@ -34,8 +34,10 @@ class EventIndexerSpec extends SparkSpec {
 
   test("denseInOrder: range-ordered partitions are indexed in place and equal dense") {
     val df = rangeOrdered(4)
-    val (out, counts, cleanup) = EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 10L)
+    val (out, counts, inOrder, cleanup) =
+      EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 10L)
     try {
+      assert(inOrder)
       val got = triples(out)
       assert(got === triples(EventIndexer.dense(df, order, "idx", 10L)))
       assert(got.map(_._3) === (11L to 10L + got.size))
@@ -47,8 +49,10 @@ class EventIndexerSpec extends SparkSpec {
 
   test("denseInOrder: overlapping partitions fall back to the range shuffle, same result") {
     val df = rangeOrdered(4).repartition(3) // round-robin: every range overlaps
-    val (out, counts, cleanup) = EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 0L)
+    val (out, counts, inOrder, cleanup) =
+      EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 0L)
     try {
+      assert(!inOrder)
       assert(rangeShuffled(out), "overlapping ranges take the dense fallback")
       assert(triples(out) === triples(EventIndexer.dense(df, order, "idx", 0L)))
       assert(counts.values.sum === df.count())
@@ -57,7 +61,7 @@ class EventIndexerSpec extends SparkSpec {
 
   test("denseInOrder: an empty batch indexes to an empty frame with no counts") {
     val df = rangeOrdered(2).filter(lit(false))
-    val (out, counts, cleanup) = EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 5L)
+    val (out, counts, _, cleanup) = EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 5L)
     try {
       assert(out.count() === 0)
       assert(out.columns.toSeq === Seq("seq", "pos", "topic", "idx"))
@@ -67,7 +71,7 @@ class EventIndexerSpec extends SparkSpec {
 
   test("denseInOrder: replaying a batch gives the same indices, however it is split") {
     def run(df: DataFrame): Seq[(Long, Long, Long)] = {
-      val (out, _, cleanup) = EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 42L)
+      val (out, _, _, cleanup) = EventIndexer.denseInOrderManaged(df, order, "topic", "idx", 42L)
       try triples(out) finally cleanup()
     }
     val first = run(rangeOrdered(4))

@@ -476,4 +476,49 @@ class SchemaRegistrySpec extends SparkSpec {
     }
     assert(checked > 300, s"sweep generated too few cases: $checked")
   }
+
+  test("the decode stage compiles under whole-stage codegen: 4 tables x 2 " +
+    "versions of bigint, varchar, double, datetime and an added column") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val reg = new SchemaRegistry
+    val base = Seq(Decode.ColMeta("event_id", "bigint(20)"), Decode.ColMeta("user_id", "bigint(20)"),
+      Decode.ColMeta("event_type", "varchar(16)"), Decode.ColMeta("value", "double"),
+      Decode.ColMeta("ts", "datetime(6)"), Decode.ColMeta("props", "varchar(64)"))
+    val tables = (0 until 4).map(t => s"events_$t")
+    tables.foreach(t => reg.register("shop", t, base))
+    def img(i: Int, noted: Boolean): Seq[String] =
+      Seq(i.toString, (i % 7).toString, "view", s"$i.5", "2024-01-02 03:04:05.000006",
+        "{\"k\":\"v\"}") ++ (if (noted) Seq(s"n$i") else Nil)
+    val raw = tables.zipWithIndex.flatMap { case (t, k) =>
+      val s0 = k * 1000L
+      Seq(
+        ("shop", t, "insert", 1L, s0 + 1, Seq(img(1, false), img(2, false)), null: String),
+        ("shop", t, "update", 1L, s0 + 2, Seq(img(1, false), img(3, false)), null: String),
+        ("shop", t, "alter", 1L, s0 + 3, null: Seq[Seq[String]],
+          s"ALTER TABLE shop.$t ADD COLUMN note varchar(16)"),
+        ("shop", t, "update", 1L, s0 + 4, Seq(img(2, true), img(4, true)), null: String),
+        ("shop", t, "delete", 1L, s0 + 5, Seq(img(4, true)), null: String))
+    }.toDF("database", "table", "action", "ts", "stmt_seq", "rows", "query").repartition(2)
+    val (out, _, cleanup) = reg.decodeBatchManaged(raw)
+    try {
+      val sorted = out.sortWithinPartitions("stmt_seq", "pair_pos")
+      // collect, so an adaptive plan reaches its final, code-generated form
+      assert(sorted.collect().length === 4 * 6, "per table: 2 inserts, 2 update pairs, alter, delete")
+      assert(tables.forall(t => reg.versionsOf("shop", t).size == 2))
+      val stages = new AdaptiveSparkPlanHelper {}
+        .collect(sorted.queryExecution.executedPlan) { case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, "the decode runs under whole-stage codegen")
+      val limit = spark.sessionState.conf.hugeMethodLimit
+      stages.foreach { w =>
+        val (_, code) = w.doCodeGen()
+        val stats = scala.util.Try(CodeGenerator.compile(code)._2)
+          .fold(e => fail(s"stage ${w.codegenStageId} does not compile: $e"), identity)
+        assert(stats.maxMethodCodeSize <= limit,
+          s"stage ${w.codegenStageId}: largest method ${stats.maxMethodCodeSize} B > $limit B")
+      }
+    } finally cleanup()
+  }
 }

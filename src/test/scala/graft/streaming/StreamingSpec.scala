@@ -141,4 +141,66 @@ class StreamingSpec extends SparkSpec {
     val sinks = reg.asSinks("/tmp/subs")
     assert(sinks.map(_.name) === Seq("firehose", "phpClient"))
   }
+
+  test("TCP push of an in-order positional batch: frames in strictly increasing " +
+    "event_index, no range sort in the push plan") {
+    import spark.implicits._
+    val reg = new graft.cdc.SchemaRegistry
+    Seq("a", "b").foreach(t => reg.register("d", t,
+      Seq(graft.cdc.Decode.ColMeta("id", "int(11)"), graft.cdc.Decode.ColMeta("v", "varchar(8)"))))
+    // three source partitions, each a contiguous run of statements in binlog order
+    val stmts = (1 to 60).map { i =>
+      val imgs = if (i % 3 == 0) Seq(Seq(s"$i", "o"), Seq(s"$i", "n"), Seq(s"${i + 1}", "o"),
+        Seq(s"${i + 1}", "n")) else Seq(Seq(s"$i", "x"))
+      ("d", if (i % 2 == 0) "a" else "b", if (i % 3 == 0) "update" else "insert", 1L,
+        i * 10L, imgs, null: String)
+    }
+    val batch = spark.sparkContext.parallelize(stmts, 3)
+      .toDF("database", "table", "action", "ts", "stmt_seq", "rows", "query")
+    val server = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val frames = scala.collection.mutable.ArrayBuffer[String]()
+    val reader = new Thread(() => {
+      val sock = server.accept()
+      try {
+        val re = new Frame.Reassembler
+        val buf = new Array[Byte](8192)
+        var n = sock.getInputStream.read(buf)
+        while (n >= 0) {
+          frames.synchronized(frames ++= re.feed(buf, n).collect {
+            case (Frame.CMD_PUBLISH, b) => new String(b, "UTF-8")
+          })
+          n = sock.getInputStream.read(buf)
+        }
+      } finally sock.close()
+    })
+    reader.start()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val pos = tmp().resolve("pos.bin").toString
+    try {
+      CdcStream.processPositionalBatch(batch, 0L, pos,
+        Seq(SinkConfig("all", tmp().resolve("all").toString)), reg,
+        pushTo = Some(("127.0.0.1", server.getLocalPort)))
+      reader.join(30000)
+      val idx = frames.synchronized(frames.toList).map(f =>
+        "\"event_index\":(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong)
+      assert(idx === (1L to 80L).toList, "40 inserts + 20 updates of two pairs, in index order")
+      val deadline = System.currentTimeMillis() + 30000
+      def push = plans.asScala.filter(_.contains("Coalesce ("))
+      while (push.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(push.size === 1, "the push ran as one coalesced job")
+      assert(!plans.asScala.exists(_.toLowerCase.contains("rangepartitioning")),
+        plans.asScala.filter(_.toLowerCase.contains("rangepartitioning")).mkString("\n"))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      server.close()
+    }
+  }
 }
